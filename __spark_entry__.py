@@ -292,7 +292,8 @@ def q_quality_metrics_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(
                     "document outside the ASCII oracle domain (doc_id="
                 ),
-                F.col("doc_id").cast("string"),
+                # a NULL doc_id would make the whole message NULL
+                F.coalesce(F.col("doc_id").cast("string"), F.lit("NULL")),
                 F.lit(
                     ") — quality_metrics_udf's replay is only proven there"
                 ),
@@ -1242,8 +1243,9 @@ CHANGED_THIS_ROUND = {
     "quality_filter",
     # ASCII guard folded into the lazy plan
     "quality_metrics_udf",
-    # wave-runner fast paths (write-first delta, seed-only gate skip,
-    # single-delta snapshot, hash-partitioned fetch fan-out)
+    # wave runner: one post-selection flow (the fetch written once, counts
+    # from the committed bytes), seed-only gate skip, single-delta
+    # snapshot, hash-partitioned fetch fan-out
     "politeness_wave",
     "frontier_waves",
     "crawl_order",
@@ -1254,6 +1256,8 @@ CHANGED_THIS_ROUND = {
     "ann_rescore_topk",
     "binary_rescore_topk",
     "hamming_topk",
+    # the session gap is compared in microseconds, not whole seconds
+    "sessionize",
 }
 
 

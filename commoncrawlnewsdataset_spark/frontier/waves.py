@@ -191,7 +191,10 @@ class WaveRunner:
     # arithmetic instead of sleeping (reference analog: 1 rps RateLimiter,
     # 07_geocode_news.py:149-155)
     wave_seconds: float | None = None
-    # fetch tasks per core: fine-grained tasks pack the tail of the stage
+    # fetch tasks per core: the fetch stage runs defaultParallelism × this
+    # many tasks in every runner shape (nothing coalesces it before the
+    # write that materializes it), and that write leaves one delta (or
+    # sink) file per task.  Fine-grained tasks pack the tail of the stage
     # (a single-round schedule of coarse tasks leaves cores idle at the
     # end).  r8: default 8 -> 2 — an interleaved A/B at 343k urls read the
     # 2/core fan-out ~25% faster than 8/core (fewer python-worker task
@@ -203,12 +206,14 @@ class WaveRunner:
     # last-wave failure rate (politeness.adaptive_host_budgets); combined
     # with crawl-delay budgets by LEAST when both apply
     adaptive_budgets: bool = False
-    # when set, fetched payloads are persisted per wave as parquet under this
-    # dir (input_hint pages shape via .pages()); the wave's delta/metrics are
-    # then derived by RE-READING the sink (payload column pruned) so the
-    # fetch runs exactly once — content feeds the extraction spine instead of
-    # being discarded.  Use a payload-returning fetcher
-    # (make_http_fetcher(keep_content=True) / simulated_fetch_with_payload).
+    # when set, the fetch is materialized as wave=N.parquet under this dir
+    # (every outcome column plus the html payload; .pages() serves the
+    # input_hint pages shape) and the wave's delta is then written from a
+    # column-pruned re-read of it, so the fetch runs exactly once and the
+    # content feeds the extraction spine instead of being discarded.  The
+    # link expander reads the sink's ok rows, html included.  Use a
+    # payload-returning fetcher (make_http_fetcher(keep_content=True) /
+    # simulated_fetch_with_payload).
     page_sink_dir: str | None = None
     # VERDICT r4 #4 — scale-state mode: when set, compact() writes the
     # checkpoint as a parquet table BUCKETED+SORTED on url (this many
@@ -443,22 +448,15 @@ class WaveRunner:
     def _recover_checkpoint_swap(self, upto: int) -> None:
         """Recover a checkpoint whose in-place layout conversion crashed
         mid-swap (ADVICE r7): if state.parquet is missing but the staged
-        `.old` copy survives, rename it back; a surviving `.rewrite` next
-        to an intact state.parquet is an incomplete conversion and is
-        discarded.  Idempotent; no-op on healthy checkpoints."""
-        import shutil
-
-        out = self._checkpoint_dir(upto)
-        state_path = os.path.join(out, "state.parquet")
+        `.old` copy survives, rename it back.  Nothing else — this runs on
+        the read path, and a `.rewrite` or `.old` next to an intact
+        state.parquet may belong to a compactor that is still running, so
+        only compact() deletes them.  Idempotent; no-op on healthy
+        checkpoints."""
+        state_path = os.path.join(self._checkpoint_dir(upto), "state.parquet")
         old_path = state_path + ".old"
         if not os.path.isdir(state_path) and os.path.isdir(old_path):
             os.rename(old_path, state_path)
-        if os.path.isdir(state_path):
-            if os.path.isdir(old_path):
-                shutil.rmtree(old_path)  # swap completed; cleanup died
-            rw = state_path + ".rewrite"
-            if os.path.isdir(rw):
-                shutil.rmtree(rw)  # conversion never reached the swap
 
     def _read_checkpoint(self, upto: int) -> DataFrame:
         """Checkpoint scan: plain parquet normally; in bucket_state mode the
@@ -600,6 +598,14 @@ class WaveRunner:
         upto = self.last_wave() if upto_wave is None else upto_wave
         out = self._checkpoint_dir(upto)
         state_path = os.path.join(out, "state.parquet")
+        self._recover_checkpoint_swap(upto)
+        if os.path.isdir(state_path):
+            # leftovers of an earlier compactor of this checkpoint: a
+            # `.rewrite` is a conversion that never reached the swap, an
+            # `.old` a swap whose cleanup died
+            for stale in (state_path + ".rewrite", state_path + ".old"):
+                if os.path.isdir(stale):
+                    shutil.rmtree(stale)
         rewrite_in_place = upto in self.committed_checkpoints()
         old_buckets = self._ckpt_bucket_count(upto) if rewrite_in_place else None
         if rewrite_in_place:
@@ -631,9 +637,7 @@ class WaveRunner:
             # the two renames leaves `.old` (recovered by
             # _recover_checkpoint_swap on the next read) instead of
             # unrecoverable loss once covered deltas were expired.
-            old_path = state_path + ".old"
-            if os.path.isdir(old_path):
-                shutil.rmtree(old_path)
+            old_path = state_path + ".old"  # cleared at the top of compact()
             os.rename(state_path, old_path)
             os.rename(target, state_path)
             shutil.rmtree(old_path)
@@ -1071,7 +1075,7 @@ class WaveRunner:
         else:
             invalid_df = None
             cand_pending = unseen
-        self._head_unseen_cache = unseen  # run_wave unpersists post-fetch
+        self._head_unseen_cache = unseen  # run_wave unpersists it at wave end
         return (
             politeness_rank(
                 cand_pending.drop("_h"), self.per_host_budget, self.nsalt,
@@ -1084,19 +1088,13 @@ class WaveRunner:
         """Per-file row counts of a written delta, read from the parquet
         FOOTERS on the driver — the per-partition lineage of the committed
         bytes at zero Spark jobs (a file is the persisted partition)."""
-        try:
-            import pyarrow.parquet as pq
+        import pyarrow.parquet as pq
 
-            files = sorted(
-                f for f in os.listdir(delta_path)
-                if f.endswith(".parquet") or f.startswith("part-")
-            )
-            return {
-                i: pq.ParquetFile(os.path.join(delta_path, f)).metadata.num_rows
-                for i, f in enumerate(files)
-            }
-        except Exception:
-            return {}
+        files = sorted(f for f in os.listdir(delta_path) if f.startswith("part-"))
+        return {
+            i: pq.ParquetFile(os.path.join(delta_path, f)).metadata.num_rows
+            for i, f in enumerate(files)
+        }
 
     def _fetch(self, selected: DataFrame) -> DataFrame:
         """Fetch stage: frontier columns pass straight THROUGH the Arrow UDF,
@@ -1179,14 +1177,35 @@ class WaveRunner:
         )
 
     def run_wave(self) -> dict:
-        """Execute the next wave; returns its manifest (committed atomically:
-        delta parquet first, manifest last).
+        """Execute the next wave and return its manifest.
 
-        Driver-job budget per wave (matters at high wave cadence): one
-        isEmpty probe on the seen-set, ONE combined metrics collect
-        (per-partition lineage × status — ~2·numPartitions tiny rows), the
-        delta write, and optionally the top-host stats job.  There is no
-        separate pre-count: emptiness is detected from the metrics."""
+        Selection resolves the snapshot once and ranks the wave (candidate
+        head, partial fallback, seed-only gate skip or full scan).  The rest
+        is one flow for every runner shape, and every count it records is
+        read back from the bytes it committed:
+
+        1. fetch_write — the fetch UDF runs inside the one write that
+           materializes it: the page sink when ``page_sink_dir`` is set
+           (then the delta's outcome columns are written from a
+           column-pruned re-read of the sink), else ``delta.parquet``
+           itself.  Nothing coalesces the fetch stage, so it keeps
+           defaultParallelism × fetch_tasks_per_core tasks.
+        2. metrics — ``per_partition_rows`` from the delta files' parquet
+           footers (no job), status counts from one pruned
+           ``groupBy("status")`` collect, and with ``detailed_metrics`` one
+           more collect for the top hosts.
+        3. links — with a ``link_expander`` and at least one fetched url:
+           the expander reads the committed rows (the sink's ok rows, with
+           html, or the delta's fetched rows), and the URL-seen-gated
+           discoveries are appended to the same delta dir as pending rows
+           in one write.  ``n_discovered`` = footer rows − ``n_selected``.
+        4. commit — ``manifest.json`` last.  A crash before it leaves no
+           manifest; the re-run overwrites the sink and the delta, so the
+           wave is idempotent.
+
+        Every manifest has the same keys.  ``phase_s`` always holds
+        select, fetch_write, metrics and links, 0.0 for a phase that did not
+        run.  A wave with nothing selected commits ``done: True``."""
         wave = self.last_wave() + 1
         t0 = time.time()
         # ONE snapshot resolution per wave: in bucket_state mode the parts
@@ -1242,235 +1261,137 @@ class WaveRunner:
                         seed_only = False
             selected = self.select_wave(state, parts, assume_no_fetched=seed_only)
 
-        results = self._fetch(selected)
-        if self.page_sink_dir is not None:
-            # One fetch pass: persist payloads immediately, then derive the
-            # delta/metrics by re-reading the sink — parquet column pruning
-            # keeps the binary html out of every downstream scan.
-            results.write.mode("overwrite").parquet(self._page_sink_path(wave))
-            results = self.spark.read.parquet(self._page_sink_path(wave))
-        outcome_cols = [
-            F.col("url"), F.col("url_hash"), F.col("host"),
-            F.when(F.col("ok"), "fetched").otherwise("failed").alias("status"),
-            F.col("priority").cast("double"),
-            F.lit(wave).alias("wave"),
-            F.col("attempts"),
-            F.col("discovered_ts").cast("timestamp"),
-        ]
-        if self.page_sink_dir is None and self.link_expander is None:
-            # r8 WRITE-FIRST path (the common crawl-simulation shape): the
-            # delta WRITE is the fetch's one materialization — the sink
-            # variant of "fetch exactly once" without the ~wave-sized
-            # .cache() the old path paid (cache build + eviction pressure
-            # measured ~1.5 s/wave at 400k urls).  Metrics then derive
-            # from the committed bytes: status counts from a column-pruned
-            # re-read (status+attempts only), per-file lineage from the
-            # parquet footers driver-side (no job at all).  With a page
-            # sink the sink write already plays this role; with a link
-            # expander the outcomes feed discovery and stay on the cached
-            # path below.
-            outcome = results.select(*outcome_cols)
-            t_select_built = time.time()
+        try:
+            t_selected = time.time()
+            results = self._fetch(selected)
+            if self.page_sink_dir is not None:
+                results.write.mode("overwrite").parquet(self._page_sink_path(wave))
+                # column pruning keeps the binary html out of the delta scan
+                results = self.spark.read.parquet(self._page_sink_path(wave))
             self._write_delta(
-                outcome.coalesce(self.spark.sparkContext.defaultParallelism), wave
+                results.select(
+                    "url", "url_hash", "host",
+                    F.when(F.col("ok"), "fetched").otherwise("failed").alias("status"),
+                    F.col("priority").cast("double"),
+                    F.lit(wave).alias("wave"),
+                    "attempts",
+                    F.col("discovered_ts").cast("timestamp"),
+                ),
+                wave,
             )
             t_written = time.time()
-            if self._head_unseen_cache is not None:
-                self._head_unseen_cache.unpersist()
-                self._head_unseen_cache = None
+
             delta_path = os.path.join(self._wave_dir(wave), "delta.parquet")
-            written = self.spark.read.parquet(delta_path)
-            status_rows = (
-                written.groupBy("status").agg(F.count("*").alias("rows")).collect()
-            )
-            t_metrics = time.time()
-            status_counts = {r["status"]: r["rows"] for r in status_rows}
-            n_selected = sum(status_counts.values())
             part_rows = self._delta_file_rows(delta_path)
-            if not part_rows and n_selected:
-                part_rows = {0: n_selected}  # footer read unavailable
-            if state is not None:
-                state.unpersist()
-            if parts is not None and parts[1] is not None:
-                parts[1].unpersist()
-            if n_selected == 0:
-                manifest = {"wave": wave, "n_selected": 0, "done": True,
-                            "head_used": head_used,
-                            "elapsed_s": time.time() - t0}
-                self._commit(wave, manifest)
-                return manifest
-            host_stats = []
-            if self.detailed_metrics:
-                host_stats = [
+            n_selected = sum(part_rows.values())
+            outcome = self.spark.read.parquet(delta_path)
+            status_counts = {
+                r["status"]: r["rows"]
+                for r in outcome.groupBy("status").agg(F.count("*").alias("rows")).collect()
+            }
+            top_hosts = []
+            if self.detailed_metrics and n_selected:
+                top_hosts = [
                     r.asDict()
-                    for r in written.groupBy("host")
+                    for r in outcome.groupBy("host")
                     .agg(F.count("*").alias("n"), F.sum("attempts").alias("attempts"))
                     .orderBy(F.desc("n"), "host")
                     .limit(20)
                     .collect()
                 ]
+            t_metrics = time.time()
+
+            n_fetched = status_counts.get("fetched", 0)
+            n_discovered, links_s = 0, 0.0
+            if self.link_expander is not None and n_fetched:
+                # with a page sink the expander sees the sink rows WITH html
+                # (frontier.links.make_html_link_expander); without one it
+                # sees the delta's fetched rows (url/priority/ts)
+                if self.page_sink_dir is not None:
+                    fetched = results.filter(F.col("ok")).withColumn(
+                        "status", F.lit("fetched")
+                    )
+                else:
+                    fetched = outcome.filter(F.col("status") == "fetched")
+                self._discovered_pending(fetched, outcome, state, parts, wave).write.mode(
+                    "append"
+                ).parquet(delta_path)
+                n_discovered = sum(self._delta_file_rows(delta_path).values()) - n_selected
+                links_s = round(time.time() - t_metrics, 3)
+
             elapsed = time.time() - t0
             manifest = {
                 "wave": wave,
                 "phase_s": {
-                    "plan": round(t_select_built - t0, 3),
-                    "fetch_write": round(t_written - t_select_built, 3),
+                    "select": round(t_selected - t0, 3),
+                    "fetch_write": round(t_written - t_selected, 3),
                     "metrics": round(t_metrics - t_written, 3),
-                    "host_stats": round(time.time() - t_metrics, 3),
+                    "links": links_s,
                 },
                 "n_selected": n_selected,
-                "n_fetched": status_counts.get("fetched", 0),
+                "n_fetched": n_fetched,
                 "n_failed": status_counts.get("failed", 0),
-                "n_discovered": 0,
+                "n_discovered": n_discovered,
                 "head_used": head_used,
                 "per_partition_rows": [
                     {"partition": p, "rows": n} for p, n in sorted(part_rows.items())
                 ],
-                "top_hosts": host_stats,
+                "top_hosts": top_hosts,
                 "elapsed_s": elapsed,
                 "urls_per_sec": n_selected / elapsed if elapsed > 0 else None,
-                "done": False,
+                "done": n_selected == 0,
             }
             self._commit(wave, manifest)
             return manifest
-        outcome = results.select(*outcome_cols).cache()
-
-        # per-partition lineage + status counts in ONE pass (north_rule:
-        # "checkpoints each crawl wave ... with per-partition lineage and
-        # fetch/dedup metrics")
-        t_select_built = time.time()
-        lineage = (
-            outcome.groupBy(F.spark_partition_id().alias("partition"), "status")
-            .agg(F.count("*").alias("rows"), F.sum("attempts").alias("attempts"))
-            .collect()
-        )
-        t_fetched = time.time()
-        if self._head_unseen_cache is not None:
-            self._head_unseen_cache.unpersist()
+        finally:
+            for df in (state, parts and parts[1], self._head_unseen_cache):
+                if df is not None:
+                    df.unpersist()
             self._head_unseen_cache = None
-        n_selected = sum(r["rows"] for r in lineage)
-        if n_selected == 0:
-            manifest = {"wave": wave, "n_selected": 0, "done": True,
-                        "head_used": head_used,
-                        "elapsed_s": time.time() - t0}
-            self._write_delta(outcome.coalesce(1), wave)
-            self._commit(wave, manifest)
-            outcome.unpersist()
-            if state is not None:
-                state.unpersist()
-            if parts is not None and parts[1] is not None:
-                parts[1].unpersist()
-            return manifest
 
-        status_counts: dict[str, int] = {}
-        part_rows: dict[int, int] = {}
-        for r in lineage:
-            status_counts[r["status"]] = status_counts.get(r["status"], 0) + r["rows"]
-            part_rows[r["partition"]] = part_rows.get(r["partition"], 0) + r["rows"]
-        host_stats = []
-        if self.detailed_metrics:
-            host_stats = [
-                r.asDict()
-                for r in outcome.groupBy("host")
-                .agg(F.count("*").alias("n"), F.sum("attempts").alias("attempts"))
-                .orderBy(F.desc("n"), "host")
-                .limit(20)
-                .collect()
-            ]
-
-        t_stats = time.time()
-        n_discovered = 0
-        delta = outcome
-        if self.link_expander is not None:
-            # with a page sink the expander sees the sink-backed rows WITH
-            # html, enabling real link discovery from page content
-            # (frontier.links.make_html_link_expander); without one it sees
-            # the plain outcomes (url/priority/ts), as before
-            if self.page_sink_dir is not None:
-                src_rows = results.filter(F.col("ok")).withColumn(
-                    "status", F.lit("fetched")
-                )
-            else:
-                src_rows = outcome.filter(F.col("status") == "fetched")
-            discovered = self.link_expander(src_rows)
-            keyed = with_frontier_keys(discovered)
-            # Deterministic representative per discovered url (NOT
-            # dropDuplicates, which picks an arbitrary row under parallelism):
-            # priority feeds politeness ranking, so crawl order / resume
-            # reproducibility requires the same tie-break as load_seeds.
-            dw = Window.partitionBy("url").orderBy(
-                F.desc("priority"), F.asc("discovered_ts"), F.asc("url")
+    def _discovered_pending(
+        self, fetched: DataFrame, outcome: DataFrame, state, parts, wave: int
+    ) -> DataFrame:
+        """The link expander's urls over ``fetched``, keyed, URL-seen gated
+        against the resolved state plus this wave's committed ``outcome``,
+        one deterministic row per url, as pending delta rows."""
+        keyed = with_frontier_keys(self.link_expander(fetched))
+        if self.bucket_state and parts is not None and parts[0] is not None:
+            # split gate: the frontier-sized component joins as the
+            # bucketed checkpoint scan (no Exchange); only the wave-bounded
+            # component (deltas + this wave's outcomes) broadcasts
+            from commoncrawlnewsdataset_spark.frontier.core import (
+                filter_unseen_split,
             )
-            if self.bucket_state and parts is not None and parts[0] is not None:
-                # split gate: the frontier-sized component joins as the
-                # bucketed checkpoint scan (no Exchange); only the
-                # wave-bounded component (deltas + this wave's outcomes)
-                # broadcasts
-                from commoncrawlnewsdataset_spark.frontier.core import (
-                    filter_unseen_split,
-                )
 
-                ckpt_df, deltas, _ = parts
-                known_small = outcome.select("url")
-                if deltas is not None:
-                    known_small = known_small.unionByName(deltas.select("url"))
-                gated = filter_unseen_split(
-                    keyed, ckpt_df.select("url"), known_small, use_bloom=False
-                )
-            else:
-                known = state.select("url").unionByName(outcome.select("url"))
-                gated = filter_unseen(keyed, known, use_bloom=False)
-            fresh = (
-                gated
-                .withColumn("_rn", F.row_number().over(dw))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
+            ckpt_df, deltas, _ = parts
+            known_small = outcome.select("url")
+            if deltas is not None:
+                known_small = known_small.unionByName(deltas.select("url"))
+            gated = filter_unseen_split(
+                keyed, ckpt_df.select("url"), known_small, use_bloom=False
             )
-            new_pending = fresh.select(
-                "url", "url_hash", "host",
-                F.lit("pending").alias("status"),
-                F.col("priority").cast("double"),
-                F.lit(wave).alias("wave"),
-                F.lit(0).alias("attempts"),
-                F.col("discovered_ts").cast("timestamp"),
-            ).cache()
-            n_discovered = new_pending.count()
-            delta = outcome.unionByName(new_pending)
-        # outcome is cached by the metrics collect above, so this coalesce
-        # reads the cache with `cores` tasks instead of writing cores×8 tiny
-        # parquet files from the fetch fan-out (it can NOT collapse the fetch
-        # stage's parallelism — that stage already ran)
-        delta = delta.coalesce(self.spark.sparkContext.defaultParallelism)
-        self._write_delta(delta, wave)
-        elapsed = time.time() - t0
-        manifest = {
-            "wave": wave,
-            "phase_s": {
-                "plan": round(t_select_built - t0, 3),
-                "select_fetch_metrics": round(t_fetched - t_select_built, 3),
-                "host_stats": round(t_stats - t_fetched, 3),
-                "write": round(time.time() - t_stats, 3),
-            },
-            "n_selected": n_selected,
-            "n_fetched": status_counts.get("fetched", 0),
-            "n_failed": status_counts.get("failed", 0),
-            "n_discovered": n_discovered,
-            "head_used": head_used,
-            "per_partition_rows": [
-                {"partition": p, "rows": n} for p, n in sorted(part_rows.items())
-            ],
-            "top_hosts": host_stats,
-            "elapsed_s": elapsed,
-            "urls_per_sec": n_selected / elapsed if elapsed > 0 else None,
-            "done": False,
-        }
-        self._commit(wave, manifest)
-        if state is not None:
-            state.unpersist()
-        if parts is not None and parts[1] is not None:
-            parts[1].unpersist()
-        outcome.unpersist()
-        return manifest
+        else:
+            known = state.select("url").unionByName(outcome.select("url"))
+            gated = filter_unseen(keyed, known, use_bloom=False)
+        # Deterministic representative per discovered url (NOT
+        # dropDuplicates, which picks an arbitrary row under parallelism):
+        # priority feeds politeness ranking, so crawl order / resume
+        # reproducibility requires the same tie-break as load_seeds.
+        dw = Window.partitionBy("url").orderBy(
+            F.desc("priority"), F.asc("discovered_ts"), F.asc("url")
+        )
+        fresh = gated.withColumn("_rn", F.row_number().over(dw)).filter(
+            F.col("_rn") == 1
+        )
+        return fresh.select(
+            "url", "url_hash", "host",
+            F.lit("pending").alias("status"),
+            F.col("priority").cast("double"),
+            F.lit(wave).alias("wave"),
+            F.lit(0).alias("attempts"),
+            F.col("discovered_ts").cast("timestamp"),
+        )
 
     def run(
         self,

@@ -223,9 +223,11 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps per user via lag + running sum — the window machinery §2.10 uses."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    prev_epoch = F.lag("ts").over(w).cast("timestamp").cast("long")
-    gap = F.when(epoch - prev_epoch > 1800, 1).otherwise(0)
+    # microseconds, not whole seconds: a cast to long truncates, and a gap
+    # of 1800.5 s would stay inside the session
+    micros = F.unix_micros(F.col("ts").cast("timestamp"))
+    prev_micros = F.unix_micros(F.lag("ts").over(w).cast("timestamp"))
+    gap = F.when(micros - prev_micros > 1800 * 1_000_000, 1).otherwise(0)
     sess = ev.withColumn("brk", gap).withColumn(
         "session_id", F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0))
     )

@@ -211,11 +211,12 @@ def politeness_debt(
 def sessionize_stream(events_stream: DataFrame, gap_s: int = 1800):
     """Streaming twin of the batch sessionizer (plans.queries.q_sessionize):
     gap-based sessions per user as a custom stateful operator.  State per
-    user is (last_epoch, current_session_events, n_sessions,
-    max_session_events); each micro-batch's events are sorted by
-    (ts, event_id) inside the group and folded through the same >gap_s
-    break rule the batch window uses, so chronologically-batched input
-    converges to the batch answer exactly (the stream ≡ batch test).
+    user is (last_us, current_session_events, n_sessions,
+    max_session_events), times in epoch microseconds as in the batch rule;
+    each micro-batch's events are sorted by (ts, event_id) inside the group
+    and folded through the same >gap_s break rule the batch window uses,
+    so chronologically-batched input converges to the batch answer
+    exactly (the stream ≡ batch test).
     Emits running (user_id, n_sessions, max_session_events) in update mode
     — O(users) state, never O(events)."""
     import pandas as pd
@@ -232,7 +233,7 @@ def sessionize_stream(events_stream: DataFrame, gap_s: int = 1800):
     )
     state_schema = StructType(
         [
-            StructField("last_epoch", LongType()),
+            StructField("last_us", LongType()),
             StructField("cur_events", LongType()),
             StructField("n_sessions", LongType()),
             StructField("max_events", LongType()),
@@ -244,9 +245,9 @@ def sessionize_stream(events_stream: DataFrame, gap_s: int = 1800):
         last, cur, ns, mx = state.get if state.exists else (None, 0, 0, 0)
         ev = pd.concat(list(pdfs), ignore_index=True)
         ev = ev.sort_values(["ts", "event_id"])
-        for t in ev["ts"].astype("int64") // 10**9:  # ns epoch -> seconds
+        for t in ev["ts"].astype("int64") // 10**3:  # ns epoch -> microseconds
             t = int(t)
-            if last is None or t - last > gap_s:
+            if last is None or t - last > gap_s * 10**6:
                 ns += 1
                 cur = 1
             else:

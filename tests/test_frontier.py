@@ -186,6 +186,114 @@ def test_manifest_metrics(spark, tmp_path):
     assert runner.read_manifest(m["wave"]) == m
 
 
+def test_fetch_stage_keeps_tasks_per_core(spark, tmp_path):
+    """Nothing coalesces the fetch before the write that materializes it,
+    so a plain runner's fetch stage runs defaultParallelism ×
+    fetch_tasks_per_core tasks."""
+    sc = spark.sparkContext
+    runner = WaveRunner(
+        spark, str(tmp_path / "fan"), per_host_budget=5, nsalt=2,
+        use_robots=False, fetch_tasks_per_core=3,
+    )
+    runner.load_seeds(_seeds_df(spark, 80, seed=9))
+    group = f"fetch-fan-out-{tmp_path.name}"
+    sc.setJobGroup(group, "fetch fan-out")
+    try:
+        assert runner.run_wave()["n_selected"] > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(sid).numTasks
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    ]
+    assert max(tasks) == sc.defaultParallelism * 3
+
+
+def _child_links(fetched):
+    """One child per seed page and none per child, so the crawl drains."""
+    return fetched.filter(~F.col("url").endswith("/child")).select(
+        F.concat(F.col("url"), F.lit("/child")).alias("url"),
+        F.lit(0.5).alias("priority"),
+        F.col("discovered_ts"),
+    )
+
+
+WAVE_SHAPES = {
+    "plain": {},
+    "sink": {"sink": True},
+    "links": {"link_expander": _child_links},
+    "sink_links": {"sink": True, "link_expander": _child_links},
+    "bucketed": {"bucket_state": 4},
+}
+# 26 seeds over 3 hosts: one of them fails, so every shape commits failed
+# rows too
+SHAPE_URLS = [f"https://h{i % 3}.example.org/p/{i}" for i in range(26)]
+MANIFEST_KEYS = {
+    "wave", "phase_s", "n_selected", "n_fetched", "n_failed", "n_discovered",
+    "head_used", "per_partition_rows", "top_hosts", "elapsed_s",
+    "urls_per_sec", "done",
+}
+
+
+@pytest.mark.parametrize("shape", sorted(WAVE_SHAPES))
+def test_wave_manifest_schema_is_shape_independent(spark, tmp_path, shape):
+    """Every runner shape commits manifests with one key set and one
+    phase_s schema, and their counts agree with the committed delta."""
+    import duckdb
+
+    kw = dict(WAVE_SHAPES[shape])
+    if kw.pop("sink", False):
+        kw["page_sink_dir"] = str(tmp_path / "pages")
+    state_dir = str(tmp_path / "st")
+    runner = WaveRunner(
+        spark, state_dir, per_host_budget=4, nsalt=2, use_robots=False, **kw
+    )
+    runner.load_seeds(_parity_seeds(spark, SHAPE_URLS))
+    manifests = runner.run(max_waves=12, compact_every=2)
+    assert manifests[-1]["done"] and len(manifests) > 2
+    pending = dict(duckdb.sql(
+        f"SELECT wave, count(*) FROM read_parquet("
+        f"'{state_dir}/wave=*/delta.parquet/*.parquet', hive_partitioning=false) "
+        f"WHERE status = 'pending' AND wave > 0 GROUP BY wave"
+    ).fetchall())
+    for m in manifests:
+        m = runner.read_manifest(m["wave"])
+        assert set(m) == MANIFEST_KEYS
+        assert set(m["phase_s"]) == {"select", "fetch_write", "metrics", "links"}
+        assert sum(p["rows"] for p in m["per_partition_rows"]) == m["n_selected"]
+        assert m["n_fetched"] + m["n_failed"] == m["n_selected"]
+        assert m["n_discovered"] == pending.get(m["wave"], 0)
+    n_children = sum(m["n_discovered"] for m in manifests)
+    fetched_seeds = sum(simulated_fetch(u)[0] for u in SHAPE_URLS)
+    assert n_children == (fetched_seeds if "link_expander" in kw else 0)
+
+
+def test_wave_rerun_after_crash_before_manifest_is_idempotent(spark, tmp_path):
+    """A wave that wrote its sink and delta (discoveries appended) but died
+    before manifest.json re-runs to the same delta and counts: the re-run
+    overwrites both, so no appended row survives twice."""
+    import os
+
+    runner = WaveRunner(
+        spark, str(tmp_path / "st"), per_host_budget=4, nsalt=2, use_robots=False,
+        page_sink_dir=str(tmp_path / "pages"), link_expander=_child_links,
+    )
+    runner.load_seeds(_parity_seeds(spark, SHAPE_URLS))
+    first = runner.run_wave()
+    delta = os.path.join(runner._wave_dir(1), "delta.parquet")
+    rows = sorted(map(tuple, spark.read.parquet(delta).collect()))
+    os.remove(os.path.join(runner._wave_dir(1), "manifest.json"))
+    again = runner.run_wave()
+    assert again["wave"] == 1
+    for k in ("n_selected", "n_fetched", "n_failed", "n_discovered"):
+        assert again[k] == first[k]
+    assert sorted(map(tuple, spark.read.parquet(delta).collect())) == rows
+    assert runner.pages().count() == first["n_fetched"]
+
+
 def test_link_discovery_expands_frontier(spark, tmp_path):
     """Open-frontier mode: fetched pages yield child urls that enter the
     frontier as pending exactly once (URL-seen gated), then get crawled."""

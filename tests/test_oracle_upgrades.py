@@ -78,6 +78,56 @@ def test_quality_metrics_guard_rejects_non_ascii(spark, tmp_path):
         E.q_quality_metrics_udf(spark, sf).collect()
 
 
+def test_quality_metrics_guard_names_null_doc_id(spark, tmp_path):
+    """A non-ASCII row whose doc_id is NULL still raises with a message
+    that names the row (doc_id=NULL), not a NULL message."""
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    spark.createDataFrame(
+        [(0, "plain ascii text"), (None, "text mit Umlaut ü")], "doc_id long, text string"
+    ).write.parquet(f"{sf}/documents.parquet")
+    with pytest.raises(Exception, match=r"ASCII oracle domain \(doc_id=NULL\)"):
+        E.q_quality_metrics_udf(spark, sf).collect()
+
+
+def test_sessionize_compares_gap_in_microseconds(spark, tmp_path):
+    """A gap of 1800.5 s breaks the session (it exceeds the 1800 s rule),
+    exactly as the DuckDB oracle's fractional epoch() compares it; 1800 s
+    itself does not.  A whole-second cast would keep 1800.5 inside."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from commoncrawlnewsdataset_spark.plans.queries import (
+        ORACLE_SESSIONIZE,
+        q_sessionize,
+    )
+
+    t0 = dt.datetime(2024, 1, 1)
+    gaps = {1: [0.0, 1800.5, 3600.5, 3601.0], 2: [0.0, 1799.9, 3599.9]}
+    rows = [(u, t0 + dt.timedelta(seconds=s)) for u, ss in gaps.items() for s in ss]
+    sf = str(tmp_path / "sf")
+    os.makedirs(f"{sf}/events.parquet")
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(rows)), pa.int64()),
+            "ts": pa.array([t for _, t in rows], pa.timestamp("us")),
+            "user_id": pa.array([u for u, _ in rows], pa.int64()),
+            "event_type": ["view"] * len(rows),
+            "value": [1.0] * len(rows),
+            "props": ["{}"] * len(rows),
+        }),
+        f"{sf}/events.parquet/part-0.parquet",
+    )
+    got = {tuple(r) for r in q_sessionize(spark, sf).collect()}
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf}/events.parquet/*.parquet')")
+    want = set(con.sql(ORACLE_SESSIONIZE).fetchall())
+    assert got == want == {(1, 2, 3), (2, 1, 3)}
+
+
 def test_extract_pipeline_matches_entry_rows(spark, monkeypatch, tmp_path):
     """The oracle-backed q_extract_pipeline (fixture-parquet input) computes
     the same result set as entry() (createDataFrame input) — same synth

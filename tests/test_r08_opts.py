@@ -130,7 +130,7 @@ def test_broadcast_gate_unprovable_bound_drops_hint(spark, tmp_path):
 
 def test_compact_swap_crash_recovery(spark, tmp_path):
     """A crash between the two swap renames leaves state.parquet.old; the
-    next read recovers it (ADVICE r7)."""
+    next read recovers it and deletes nothing else."""
     import shutil
 
     runner = _mk_compacted_runner(spark, tmp_path)
@@ -144,9 +144,13 @@ def test_compact_swap_crash_recovery(spark, tmp_path):
     runner._recover_checkpoint_swap(ckpt)
     assert os.path.isdir(state_path)
     assert _rows(runner.state(upto_wave=ckpt)) == before
-    # a stray .rewrite next to an intact state.parquet is discarded
+    # a .rewrite next to an intact state.parquet may be a live compactor's
+    # staging dir: readers leave it in place, only compact() clears it
     os.makedirs(state_path + ".rewrite", exist_ok=True)
     runner._recover_checkpoint_swap(ckpt)
+    assert _rows(runner.state(upto_wave=ckpt)) == before
+    assert os.path.isdir(state_path + ".rewrite")
+    assert runner.compact(ckpt) == ckpt
     assert not os.path.isdir(state_path + ".rewrite")
     # and the read path runs recovery implicitly
     os.rename(state_path, state_path + ".old")

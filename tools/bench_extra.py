@@ -122,7 +122,7 @@ def cmd_wave(n_urls: int) -> None:
             r = frontier_wave_bench(spark, n_urls=n_urls, state_dir=tmp)
             with open(os.path.join(tmp, "wave=00001", "manifest.json")) as fh:
                 m = json.load(fh)
-            r["phase_s"] = m.get("phase_s")
+            r["phase_s"] = m["phase_s"]
             print(json.dumps(r), flush=True)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)

@@ -78,10 +78,10 @@ def main() -> None:
             rows.append(
                 {
                     "wave": m["wave"],
-                    "n_selected": m.get("n_selected", 0),
+                    "n_selected": m["n_selected"],
                     "wall": round(time.time() - t0, 2),
-                    "head_used": m.get("head_used", False),
-                    "phase_s": m.get("phase_s", {}),
+                    "head_used": m["head_used"],
+                    "phase_s": m["phase_s"],
                 }
             )
             if w % 3 == 0 and not m.get("done"):
@@ -124,15 +124,14 @@ def main() -> None:
             f.write(
                 f"## {name} (seed {rr['seed_s']:.1f}s; {total:,} urls over "
                 f"{wall:.1f}s = {total / wall:,.0f} urls/s)\n\n"
-                "| wave | selected | wall (s) | head_used | plan (s) | fetch (s) |\n"
+                "| wave | selected | wall (s) | head_used | select (s) | fetch+write (s) |\n"
                 "|---|---|---|---|---|---|\n"
             )
             for r in rr["rows"]:
                 ph = r["phase_s"]
-                fetch_s = ph.get("fetch_write", ph.get("select_fetch_metrics", 0))
                 f.write(
                     f"| {r['wave']} | {r['n_selected']:,} | {r['wall']} | "
-                    f"{r['head_used']} | {ph.get('plan', 0)} | {fetch_s} |\n"
+                    f"{r['head_used']} | {ph['select']} | {ph['fetch_write']} |\n"
                 )
             f.write("\n")
     for rr in runs.values():

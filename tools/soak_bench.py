@@ -124,7 +124,7 @@ def main() -> None:
         shuf_prev = shuffle_write_bytes()  # compaction shuffle not charged to waves
         if m.get("head_used"):
             note = (note + ", " if note else "") + "head"
-        rows.append((m["wave"], m.get("n_selected", 0), wall, m.get("phase_s", {}), note, shuf_mb))
+        rows.append((m["wave"], m["n_selected"], wall, m["phase_s"], note, shuf_mb))
         if m.get("done"):
             break
 
@@ -153,18 +153,13 @@ def main() -> None:
             "set.  With head_factor=0 — or before the first compaction — "
             "wave SELECTION is the full O(pending) rank; with the candidate "
             "head it is O(head ∪ delta) per wave, see BENCH/HEAD.md).\n\n"
-            "| wave | selected | wall (s) | plan (s) | fetch+metrics (s) | write (s) | shuffle write (MB) | compaction |\n"
+            "| wave | selected | wall (s) | select (s) | fetch+write (s) | metrics (s) | shuffle write (MB) | compaction |\n"
             "|---|---|---|---|---|---|---|---|\n"
         )
         for w, nsel, wall, ph, note, shuf_mb in rows:
-            # r8: the write-first wave path emits fetch_write/metrics phase
-            # keys (the delta write IS the fetch materialization); older
-            # manifests carry select_fetch_metrics/write
-            fetch_s = ph.get("fetch_write", ph.get("select_fetch_metrics", 0))
-            write_s = ph.get("metrics", ph.get("write", 0))
             f.write(
-                f"| {w} | {nsel:,} | {wall:.2f} | {ph.get('plan', 0):.2f} | "
-                f"{fetch_s:.2f} | {write_s:.2f} | "
+                f"| {w} | {nsel:,} | {wall:.2f} | {ph['select']:.2f} | "
+                f"{ph['fetch_write']:.2f} | {ph['metrics']:.2f} | "
                 f"{shuf_mb:.0f} | {note} |\n"
             )
     print(
